@@ -115,7 +115,7 @@ def run_jvm(classpath, args, work, jvm_opts=()):
         if os.environ.get("JAVA_HOME") else "java"
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    cmd = [java, "-Xmx2g", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1",
+    cmd = [java, "-Xmx2g", "-XX:+UseG1GC",
            f"-Djava.io.tmpdir={tmp}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
     for m in ADD_OPENS:

@@ -239,7 +239,7 @@ final class DbtGen(seed: Long) {
         (r.nextInt(1100000) - 100000) / 100.0,
         Segments(r.nextInt(Segments.size)), ts)
     }
-    val evs = (0 until 50).map(_ => event(ts - r.nextInt(3600)))
+    val evs = (0 until Events / 100).map(_ => event(ts - r.nextInt(3600)))
     events ++= evs
     DbtBatch(i, ts, changed, ls, evs, touched.toSet, news.size, upds.size,
       late)
@@ -258,12 +258,12 @@ final class DbtGen(seed: Long) {
 
 object DbtGen {
   val Months = 3
-  val Customers = 1000
-  val Orders = 2000
-  val Parts = 200
-  val Suppliers = 50
-  val Events = 3000
-  val EventUsers = 100
+  val Customers = 1500
+  val Orders = 15000
+  val Parts = 2000
+  val Suppliers = 100
+  val Events = 10000
+  val EventUsers = 150
   val PlantedNull = 7
   val PlantedStatus = 5
   val PlantedOrphan = 6
@@ -298,10 +298,10 @@ final case class LlmGen(docs: Seq[(Long, String)],
 }
 
 object LlmGen {
-  val Docs = 300
+  val Docs = 2000
   val ExactShare = 0.10
   val NearShare = 0.05
-  val Vecs = 200
+  val Vecs = 1000
   val Dim = 64
   val Names = 100
   val CopyBase = 1000000L
@@ -418,8 +418,8 @@ final class StreamGen(seed: Long) {
 }
 
 object StreamGen {
-  val SeedRows = 200
-  val BatchRows = 20
+  val SeedRows = 2000
+  val BatchRows = 100
   val ExactShare = 0.25
   val NearShare = 0.15
 }

@@ -12,7 +12,8 @@ object Kernels {
   /** A kernel's input table and the query that applies it. */
   type Probe = (String, DataFrame => DataFrame)
 
-  private val Replicas = 100
+  /** Each input is replicated to at least this many rows. */
+  private val TargetRows = 30000L
   private val Reps = 3
 
   private def sel(c: => Column): DataFrame => DataFrame = _.select(c.as("k"))
@@ -56,8 +57,10 @@ object Kernels {
         (System.nanoTime() - t0).toDouble
       })
     val tables = probes.values.map(_._1).toSeq.distinct.map { t =>
-      val rep = Tables.load(ctx.spark, srcDir, t)
-        .withColumn("__rep", explode(sequence(lit(1), lit(Replicas))))
+      val in = Tables.load(ctx.spark, srcDir, t)
+      val replicas = math.max(1L, TargetRows / math.max(1L, in.count()))
+      val rep = in
+        .withColumn("__rep", explode(sequence(lit(1L), lit(replicas))))
         .drop("__rep").repartition(Main.Cores).cache()
       val n = rep.count()
       t -> (rep, n, median3(s"scan $t")(rep))

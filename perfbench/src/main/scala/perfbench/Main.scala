@@ -65,10 +65,6 @@ trait Workload {
 
 object Main {
   val Cores = 4
-  val ProbeReps = 3
-  /** The probe's time on the reference machine (four cores, quiet): the
-    * timings on the result line are scaled to it. */
-  val ProbeRefS = 0.6
   def workload(name: String, seed: Long): Workload = name match {
     case "dbt_project" => new DbtProject(seed)
     case "llm_pipeline" => new LlmPipeline(seed)
@@ -110,21 +106,6 @@ object Main {
   def dirBytes(f: java.io.File): Long =
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.map(dirBytes).sum
     else f.length
-
-  /** A fixed train of small Spark jobs (a shuffle aggregate, a parquet
-    * write and its read) that calls no library code: its median time over
-    * a few repeats tracks how fast the machine runs right now. */
-  def probe(spark: SparkSession, work: String): Double =
-    Stats.median((1 to ProbeReps).map { i =>
-      val t0 = System.nanoTime()
-      spark.range(0, 100000, 1, Cores)
-        .selectExpr("id % 97 AS k", "id * 31 % 1009 AS v")
-        .groupBy("k").sum("v").write.format("noop").mode("overwrite").save()
-      spark.range(0, 2000, 1, 1).write.mode("overwrite")
-        .parquet(s"$work/probe/$i")
-      spark.read.parquet(s"$work/probe/$i").count()
-      (System.nanoTime() - t0) / 1e9
-    })
 
   /** Live heap after a full collection, in MiB. */
   def liveHeapMb(): Double = {
@@ -179,7 +160,6 @@ object Main {
     w.setup(ctx)
     val setupS = (System.nanoTime() - t0) / 1e9
     log(f"set-up: $setupS%.2fs")
-    val probeStart = probe(spark, work)
     val stamp = Map(
       "workload" -> name, "seed" -> seed, "traced" -> traced,
       "master" -> spark.sparkContext.master,
@@ -194,12 +174,6 @@ object Main {
       s"${samples.step.size} steps, median ${Stats.median(samples.step)}")
     w.check(ctx)
     log("checked")
-    val probeEnd = probe(spark, work)
-    // the machine's speed during this run against the reference: hosts
-    // that share cores slow down by half and more for minutes at a time,
-    // and a single-sample timing would carry that whole
-    val drift = (probeStart + probeEnd) / 2 / ProbeRefS
-    log(f"probe $probeStart%.3fs, $probeEnd%.3fs: drift $drift%.2f")
     val heap = liveHeapMb()
     traceOut.foreach { path =>
       ctx.rec.drain()
@@ -210,7 +184,9 @@ object Main {
       if (!traced) Map.empty[String, Double]
       else {
         ctx.rec.drain()
-        val (on, off) = samples.step.zip(samples.stepTraced).partition(_._2)
+        // step 0 is an untraced warm-up that carries the cold first calls
+        val (on, off) = samples.step.zip(samples.stepTraced).drop(1)
+          .partition(_._2)
         require(on.nonEmpty && off.nonEmpty,
           "a traced run needs traced and untraced steps")
         Metrics.complete(w.layers(ctx) + ("trace.overhead_s" ->
@@ -220,13 +196,13 @@ object Main {
     // one step is too short and too few to bound on its own: its time is
     // bounded as part of the session, and reported alone in the detail
     val e2e = Map(
-      "setup_s" -> setupS / drift,
-      "pass_s" -> Stats.median(samples.pass) / drift,
-      "session_s" -> (samples.pass.sum + stepTime) / drift,
+      "setup_s" -> setupS,
+      "pass_s" -> Stats.median(samples.pass),
+      "session_s" -> (samples.pass.sum + stepTime),
       "storage_ratio" -> samples.storageRatio,
       "heap_live_mb" -> heap)
     val errorRate = ctx.failed.toDouble / math.max(1L, ctx.attempted)
-    // the same (drift-scaled) figures under the workload's own names
+    // the same figures under the workload's own names
     val (passN, stepN, rowsN) = Metrics.named(name)
     val n = samples.step.size
     val named = Map(
@@ -234,11 +210,11 @@ object Main {
       s"${passN}_s" -> Map("value" -> e2e("pass_s"), "unit" -> "s",
         "n" -> samples.pass.size),
       "session_s" -> Map("value" -> e2e("session_s"), "unit" -> "s"),
-      s"${stepN}_p50_s" -> Map("value" -> Stats.median(samples.step) / drift,
+      s"${stepN}_p50_s" -> Map("value" -> Stats.median(samples.step),
         "unit" -> "s", "n" -> n),
-      s"${stepN}_tail_s" -> Map("value" -> Stats.tail(samples.step) / drift,
+      s"${stepN}_tail_s" -> Map("value" -> Stats.tail(samples.step),
         "unit" -> "s", "quantile" -> Stats.tailQuantile(n), "n" -> n),
-      rowsN -> Map("value" -> samples.stepRows / stepTime * drift,
+      rowsN -> Map("value" -> samples.stepRows / stepTime,
         "unit" -> "rows/s"),
       "storage_ratio" -> Map("value" -> samples.storageRatio, "unit" -> "ratio"),
       "heap_live_mb" -> Map("value" -> heap, "unit" -> "MiB"),
@@ -246,9 +222,6 @@ object Main {
     val detail = Map(
       "env" -> stamp,
       "metrics" -> named,
-      "drift" -> Map("probe_start_s" -> probeStart, "probe_end_s" -> probeEnd,
-        "reference_s" -> ProbeRefS, "factor" -> drift),
-      "raw_setup_s" -> setupS,
       "pass_samples_s" -> samples.pass,
       "step_samples_s" -> samples.step,
       "checks" -> ctx.checks.toSeq.map { case (n, ok, info) =>

@@ -38,14 +38,17 @@ final class Counters {
   * so a `SparkListener` can attribute each job, and through the job's
   * stages each task, to the innermost open span. Inactive, a span is the
   * bare call: the untraced run pays nothing but a closure. A traced run
-  * deactivates every other step, so the difference between its traced
-  * and untraced steps measures the tracing overhead. */
+  * leaves its first step untraced, as a warm-up, then deactivates every
+  * other step, so the difference between its later traced and untraced
+  * steps measures the tracing overhead. */
 final class Recorder(spark: SparkSession, val enabled: Boolean) {
   var active: Boolean = enabled
   private val GroupPrefix = "perfbench-span-"
   val spans = mutable.ArrayBuffer.empty[Span]
   private var open = List.empty[Span]
   private var cycleId = -1
+  /** The id of the open cycle span, -1 outside any cycle or untraced. */
+  def currentCycle: Int = cycleId
   private val own = new ConcurrentHashMap[Int, Counters]()
   private val stageSpan = new ConcurrentHashMap[Int, Int]()
   private val jobStart = new ConcurrentHashMap[Int, java.lang.Long]()
